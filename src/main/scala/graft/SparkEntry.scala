@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.ops.CheckpointScratch
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Each entry in [[queries]] exercises one operator family from SURVEY.md §2
@@ -182,7 +184,7 @@ object SparkEntry {
   private def jaccardPairsShared(s: SparkSession, dir: String): DataFrame =
     pairsMemo.compute((System.identityHashCode(s), dir), (_, cur) =>
       if (cur != null && !cur.sparkSession.sparkContext.isStopped) cur
-      else graft.ops.CheckpointScratch.smartCoalesce(graft.ops.Dedup
+      else CheckpointScratch.smartCoalesceDs(graft.ops.Dedup
         .jaccardAdaptivePairs(t(s, dir, "documents"), "source", threshold = 0.8)
         .localCheckpoint(true)))
 
@@ -372,34 +374,27 @@ object SparkEntry {
     // a STOPPED context is rebuilt, never served (review r4).
     docsMemo.compute((System.identityHashCode(s), n), (_, cur) =>
       if (cur != null && !cur.sparkSession.sparkContext.isStopped) cur
-      else graft.ops.CheckpointScratch.smartCoalesceDs(
+      else CheckpointScratch.smartCoalesceDs(
         graft.spark.ExtractJob.extractDocs(s, pagesFixture(s, n)).localCheckpoint(true)))
-
-  /** Eagerly unpersist a localCheckpoint-backed frame's blocks: dropping
-    * the reference alone leaves them to GC + ContextCleaner, whose
-    * asynchronous reclaim lands inside subsequent timed bench reps.
-    * ONE implementation — CheckpointScratch.drop. */
-  private def dropCheckpoint(df: Dataset[_]): Unit =
-    graft.ops.CheckpointScratch.drop(df)
 
   /** Drop all cross-query memo state (Bench calls this before every timed
     * rep so per-query numbers measure the OPERATOR, not a warm memo; it
     * also prevents dead-context Dataset references accumulating in
     * long-lived JVMs). */
   def resetSharedState(): Unit = {
-    docsMemo.values.forEach(dropCheckpoint(_))
-    pairsMemo.values.forEach(dropCheckpoint(_))
+    // eager unpersist: dropping the references alone leaves the blocks to
+    // GC + ContextCleaner, whose asynchronous reclaim lands inside
+    // subsequent timed bench reps
+    docsMemo.values.forEach(CheckpointScratch.drop(_))
+    pairsMemo.values.forEach(CheckpointScratch.drop(_))
     docsMemo.clear()
     pairsMemo.clear()
     // every op-internal eager checkpoint (funnel stages, tokenized dedup
     // bases, span-pair frames, iteration labels) registers itself in
     // CheckpointScratch — dropped here so no scratch block lingers into
     // the next timed bench rep
-    graft.ops.CheckpointScratch.unpersistAll()
+    CheckpointScratch.unpersistAll()
   }
-
-  private def scratchCkpt(df: DataFrame): DataFrame =
-    graft.ops.CheckpointScratch.ckpt(df)
 
   /** Multimodal asset fixture: real PNG encode (ImageIO, zlib IDAT) of
     * the image third of the assets costs more than the decode under test,
@@ -949,13 +944,13 @@ object SparkEntry {
   private def qCmsCounts(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val sketch = graft.ops.Sketches.countMinSketch(docs, "source", depth = 4, width = 16)
-      .transform(scratchCkpt)
+      .transform(CheckpointScratch.ckpt)
     val toks = docs
       .select(col("source"), explode(split(coalesce(col("text"), lit("")), " ")).as("token"))
       .filter(length(col("token")) > 0)
     val truth = toks.groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("true_cnt"))
-      .transform(scratchCkpt)
+      .transform(CheckpointScratch.ckpt)
     graft.ops.Sketches.countMinEstimate(sketch,
         truth.select(col("source"), col("token")), "source", depth = 4, width = 16)
       .join(truth, Seq("source", "token"))
@@ -1018,7 +1013,7 @@ object SparkEntry {
     // GC-reclaimed when unreferenced — the registry holds weak refs)
     val cells = best.select(col("url"), col("page"), explode(col("cells")).as("c"))
       .select(col("url"), col("page"), col("c.r").as("r"), col("c.c").as("c"), col("c.v").as("v"))
-      .transform(graft.ops.CheckpointScratch.ckpt)
+      .transform(CheckpointScratch.ckpt)
     val parse = udf((v: String) => graft.core.TextMetrics.parseNumeric(v))
     val facts = cells.withColumn("value0", parse(col("v")))
       .filter(col("value0").isNotNull && (col("r") + col("c")) % 3 === 0)
@@ -1155,17 +1150,17 @@ object SparkEntry {
     val s0 = graft.sources.Sitemap.sitemapEntries(
         d.select(col("doc_id").cast("string").as("sid"), plantedSitemapBody.as("body")))
       .filter(col("kind") === "url").select(col("loc").as("url"))
-      .transform(scratchCkpt)
+      .transform(CheckpointScratch.ckpt)
     // stage 1 — canonicalize + frontier dedup (the per-url identity)
     val s1 = s0.select(UrlOps.canonicalize(col("url")).as("url")).distinct()
-      .transform(scratchCkpt)
+      .transform(CheckpointScratch.ckpt)
     // stage 2 — URL blocklist: one host rule that hits (h5), one prefix
     // rule that hits (h1's /q/ subtree), one no-op host rule
     val blRules = Seq(
       ("h5.example.com", "host"),
       ("https://h1.example.com/q/", "prefix"),
       ("never.example.com", "host")).toDF("rule", "kind")
-    val s2 = UrlFilter.blocklistFilter(s1, blRules).transform(scratchCkpt)
+    val s2 = UrlFilter.blocklistFilter(s1, blRules).transform(CheckpointScratch.ckpt)
     // stage 3 — robots gate: every host disallows /q; h0-h2 re-allow the
     // /q/ subtree (longest-match Allow override); h3 blocks everything
     val hosts = s.range(7).select(
@@ -1176,7 +1171,7 @@ object SparkEntry {
       when(col("hid") === 3L, lit("Disallow: /\n")).otherwise(lit("")))
     val rRules = Robots.parseRobots(hosts.select(col("host"), rBody.as("body")))
     val s3 = Robots.robotsGate(s2, rRules)
-      .filter(col("allowed")).drop("allowed").transform(scratchCkpt)
+      .filter(col("allowed")).drop("allowed").transform(CheckpointScratch.ckpt)
     // stage 4 — per-host frequency cap: newest docs win (doc id DESC,
     // /p before /q on the same doc); uid = 2·doc_id + isq is unique per
     // url (the capPerGroup id contract)
@@ -1492,7 +1487,7 @@ object SparkEntry {
     // THREE times (rank sort, rank join, group stats) — checkpoint the
     // scored frame once so the scan-side work runs once (r9: 47 s of
     // summed task CPU at sf0.1 collapsed to one pass)
-    val scored = scratchCkpt(lang.join(q, Seq("doc_id")))
+    val scored = CheckpointScratch.ckpt(lang.join(q, Seq("doc_id")))
     val gated = graft.ops.Selection.quantileGate(
       scored, "pred_lang", num = 1L, den = 2L)
     gated.join(scored.select(col("doc_id"), col("quality_score")), Seq("doc_id"))
@@ -1642,7 +1637,7 @@ object SparkEntry {
     * partition + ordinal assignment, no single-partition window). */
   private def qPplBuckets(s: SparkSession, dir: String): DataFrame = {
     val fl = graft.ops.LmScore.bigramFluency(t(s, dir, "documents"))
-      .transform(scratchCkpt)
+      .transform(CheckpointScratch.ckpt)
     val buckets = graft.ops.Selection.scoreBuckets(fl, "avg_p", 3)
     fl.select(col("doc_id"), col("avg_p"))
       .join(buckets, Seq("doc_id"))
@@ -1848,7 +1843,7 @@ object SparkEntry {
     * the quality pass (the bug this fixes) or routing text through a
     * doc_id join (a corpus-text shuffle at scale). */
   private def qClassifierEval(s: SparkSession, dir: String): DataFrame = {
-    val labeled = scratchCkpt(evalLabeled(s, dir))
+    val labeled = CheckpointScratch.ckpt(evalLabeled(s, dir))
     val model = graft.ops.Train.linearFit(labeled,
       labelCol = "y", iters = 2, lr = 0.5)
     val bias = model.filter(col("tok").isNull).head().getDouble(1)
@@ -2090,35 +2085,35 @@ object SparkEntry {
           concat(col("text"), lit(" near dup copy")).as("text")))
       .unionByName(pii.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("source"), col("text")))
-      .transform(scratchCkpt) // each stage feeds the stat AND the next stage
+      .transform(CheckpointScratch.ckpt) // each stage feeds the stat AND the next stage
 
     // stage 1 — PII gate: scrub, drop docs with > 3 detections
     val s1 = Scrub.scrub(corpus0)
       .filter(col("n_emails") + col("n_ipv4") + col("n_phones") <= 3)
       .select(col("doc_id"), col("source"), col("clean_text").as("text"))
-      .transform(scratchCkpt)
+      .transform(CheckpointScratch.ckpt)
     // stage 2 — exact dedup: smallest id per identical text (at 100 TB the
     // partition key is (xxhash64, length) as in Dedup.exact — text-keyed
     // here so the oracle window is literal)
     val s2 = s1.withColumn("rep",
         min(col("doc_id")).over(Window.partitionBy(col("text"))))
       .filter(col("doc_id") === col("rep")).drop("rep")
-      .transform(scratchCkpt)
+      .transform(CheckpointScratch.ckpt)
     // stage 3 — near dedup: word-set jaccard pairs (cost-based strategy) →
     // connected components → keep cluster representatives
     val pairs = Dedup.jaccardAdaptivePairs(s2, "source", threshold = 0.8)
     val reps = Dedup.dedupClusters(s2, pairs)
       .filter(col("doc_id") === col("cluster_id")).select(col("doc_id"))
-    val s3 = scratchCkpt(s2.join(reps, Seq("doc_id")))
+    val s3 = CheckpointScratch.ckpt(s2.join(reps, Seq("doc_id")))
     // stage 4 — decontamination vs the benchmark subset (scrubbed the same
     // way), drop docs sharing >= half their shingles
     val bench = Scrub.scrub(pii.filter(col("doc_id") % 97 === 0))
       .select(col("doc_id"), col("clean_text").as("text"))
     val clean = Contamination.overlap(s3, bench)
       .filter(col("contamination_frac") < 0.5).select(col("doc_id"))
-    val s4 = scratchCkpt(s3.join(clean, Seq("doc_id")))
+    val s4 = CheckpointScratch.ckpt(s3.join(clean, Seq("doc_id")))
     // stage 5 — deterministic train split
-    val s5 = scratchCkpt(
+    val s5 = CheckpointScratch.ckpt(
       Splits.hashSplit(s4).filter(col("split") === "train").drop("split"))
     // stage 6 — sequence packing into 200-token bins per (source, shard)
     val binStat = Packing.packGreedy(s5, budget = 200, shards = PackShards)

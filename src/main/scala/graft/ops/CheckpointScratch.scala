@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Registry for per-invocation EAGER localCheckpoints created inside
@@ -51,7 +53,7 @@ object CheckpointScratch {
     // registering the raw checkpoint would leave only a weak ref to an
     // object nothing else holds, so GC could clear it before the next
     // unpersistAll — drop() tree-walks to the LogicalRDD either way
-    try register(smartCoalesce(df.localCheckpoint(true)))
+    try register(smartCoalesceDs(df.localCheckpoint(true)))
     finally if (old) conf.setConf(key, true)
   }
 
@@ -60,8 +62,10 @@ object CheckpointScratch {
     ds
   }
 
-  /** Typed variant of [[smartCoalesce]] — same size-derived trim,
-    * preserving the Dataset's element type (the sharedDocs memo path). */
+  /** Trim a just-materialized localCheckpoint's partition count to
+    * ceil(bytes / advisoryPartitionSizeInBytes) (the same knob AQE sizes
+    * shuffle reads with), preserving the Dataset's element type. No-op for
+    * non-RDD plans, ≤ 2 partitions, or frames already at/below the target. */
   def smartCoalesceDs[T](cp: Dataset[T]): Dataset[T] =
     try cp.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -72,7 +76,7 @@ object CheckpointScratch {
           if (want < n) cp.coalesce(want) else cp
         }
       case _ => cp
-    } catch { case _: Throwable => cp }
+    } catch { case NonFatal(_) => cp }
 
   private def targetPartitions(spark: org.apache.spark.sql.SparkSession,
       rdd: org.apache.spark.rdd.RDD[_], n: Int): Int = {
@@ -85,16 +89,10 @@ object CheckpointScratch {
     math.min(math.max(1L, (bytes + advisory - 1L) / advisory), n.toLong).toInt
   }
 
-  /** Trim a just-materialized localCheckpoint's partition count to
-    * ceil(bytes / advisoryPartitionSizeInBytes) (the same knob AQE sizes
-    * shuffle reads with). No-op for non-RDD plans, ≤ 2 partitions, or
-    * frames already at/below the target. */
-  def smartCoalesce(cp: DataFrame): DataFrame = smartCoalesceDs(cp)
-
   /** Materialized byte size of a checkpoint-backed frame (the LogicalRDD's
     * storage footprint, memory + disk), or -1 when unknown (non-RDD plan,
     * stopped context, blocks not yet reported). Tree-walks like [[drop]]
-    * so a [[smartCoalesce]]-wrapped checkpoint is found too. */
+    * so a [[smartCoalesceDs]]-wrapped checkpoint is found too. */
   def materializedBytes(ds: Dataset[_]): Long =
     try {
       var found = -1L
@@ -106,7 +104,7 @@ object CheckpointScratch {
         case _ => ()
       }
       found
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** Run `body` under a STATIC plan scope for a fixed-shape iteration
     * loop: AQE off, shuffle partitions derived from bytesHint with the
@@ -170,14 +168,14 @@ object CheckpointScratch {
   /** Drop one checkpoint-backed frame's blocks now (best-effort; a
     * stopped context or non-RDD plan is skipped silently). ONE definition
     * — SparkEntry's memo path uses the same helper. Walks the whole
-    * analyzed tree so a [[smartCoalesce]]-wrapped checkpoint (Repartition
+    * analyzed tree so a [[smartCoalesceDs]]-wrapped checkpoint (Repartition
     * over LogicalRDD) is found too. */
   def drop(ds: Dataset[_]): Unit =
     try ds.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** Drop every still-reachable registered checkpoint's blocks now. */
   def unpersistAll(): Unit = {

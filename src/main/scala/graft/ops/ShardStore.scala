@@ -1,11 +1,13 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.spark.ManifestLog
 
 /** Committed, resumable training-shard export (VERDICT r6 #2): the last
   * sink in the loader tier gets the same manifest discipline
@@ -47,15 +49,8 @@ object ShardStore {
       posMax: Long, path: String)
   final case class Manifest(id: Long, shards: Vector[ShardEntry])
 
-  def lastManifest(root: String): Option[Manifest] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return None
-    val manifests = Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("manifest-\\d+\\.tsv")).toVector
-    if (manifests.isEmpty) return None
-    Some(readManifest(manifests.maxBy(p =>
-      p.getFileName.toString.stripPrefix("manifest-").stripSuffix(".tsv").toLong)))
-  }
+  def lastManifest(root: String): Option[Manifest] =
+    ManifestLog.latest(root, "manifest").map(m => readManifest(m._2))
 
   private def readManifest(p: Path): Manifest = {
     var id = 0L
@@ -71,23 +66,14 @@ object ShardStore {
     Manifest(id, shards.result())
   }
 
-  /** Atomic commit: tmp file in the same directory, then rename. */
+  /** Atomic commit ([[ManifestLog.writeNumbered]]). */
   def commitManifest(root: String, m: Manifest): Unit = {
-    val dir = Paths.get(root)
-    Files.createDirectories(dir)
     val body = new StringBuilder(s"manifest\t${m.id}\n")
     m.shards.sortBy(_.shardId).foreach { s =>
       body ++= s"shard\t${s.shardId}\t${s.nDocs}\t${s.posMin}\t${s.posMax}\t${s.path}\n"
     }
-    val tmp = dir.resolve(s"manifest-${m.id}.tsv.tmp")
-    Files.write(tmp, body.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"manifest-${m.id}.tsv"), StandardCopyOption.ATOMIC_MOVE)
+    ManifestLog.writeNumbered(root, "manifest", m.id, body.toString)
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toVector.reverseIterator
-        .foreach(Files.deleteIfExists(_))
 
   /** Input fingerprint: row count + order-independent id-hash XOR fold
     * (bit_xor — a SUM of 64-bit hashes overflows under ANSI mode) — one
@@ -123,35 +109,24 @@ object ShardStore {
     val spark = docs.sparkSession
     val aDir = Paths.get(root, "assignment")
     val vKey = s"$root\u0000$salt\u0000$maxPerShard\u0000$idCol"
+    def pins(n: Long, idHash: Long) = Seq("salt" -> salt,
+      "maxPerShard" -> maxPerShard.toString, "idCol" -> idCol,
+      "n" -> n.toString, "idHash" -> idHash.toString)
+    val (what, why) = ("committed assignment", "delete the store or use a " +
+      "new root; silently reusing it would drop new ids / ignore changed params")
     if (!Files.isDirectory(aDir)) {
-      val tmp = Paths.get(root, "assignment.tmp")
-      deleteRecursively(tmp) // stale tmp from a crashed first attempt
-      val (n, idHash) = inputFingerprint(docs, idCol)
-      Splits.trainingShards(docs, maxPerShard, salt, idCol)
-        .write.mode("overwrite").parquet(tmp.toString)
-      Files.write(tmp.resolve("_params.tsv"),
-        s"salt\t$salt\nmaxPerShard\t$maxPerShard\nidCol\t$idCol\nn\t$n\nidHash\t$idHash\n"
-          .getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, aDir, StandardCopyOption.ATOMIC_MOVE)
+      ManifestLog.publishDir(aDir) { tmp =>
+        val (n, idHash) = inputFingerprint(docs, idCol)
+        Splits.trainingShards(docs, maxPerShard, salt, idCol)
+          .write.mode("overwrite").parquet(tmp.toString)
+        ManifestLog.pin(tmp.resolve("_params.tsv"), pins(n, idHash), what, why)
+      }
       verifiedRoots.add(vKey)
     } else if (!verifiedRoots.contains(vKey)) {
       val pf = aDir.resolve("_params.tsv")
       if (Files.isRegularFile(pf)) { // pre-fingerprint stores stay readable
-        val kv = Files.readAllLines(pf, StandardCharsets.UTF_8).asScala
-          .flatMap(_.split('\t') match {
-            case Array(k, v) => Some(k -> v)
-            case _ => None
-          }).toMap
         val (n, idHash) = inputFingerprint(docs, idCol)
-        val want = Map("salt" -> salt, "maxPerShard" -> maxPerShard.toString,
-          "idCol" -> idCol, "n" -> n.toString, "idHash" -> idHash.toString)
-        val diffs = want.collect {
-          case (k, v) if kv.getOrElse(k, v) != v => s"$k: stored=${kv(k)} now=$v"
-        }
-        require(diffs.isEmpty,
-          s"committed assignment at $root does not match this export " +
-            s"(${diffs.mkString("; ")}) — delete the store or use a new root; " +
-            "silently reusing it would drop new ids / ignore changed params")
+        ManifestLog.pin(pf, pins(n, idHash), what, why)
       }
       verifiedRoots.add(vKey) // only AFTER a pass — a failed verify must re-run
     }

@@ -1,7 +1,7 @@
 package graft.spark
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,17 +36,8 @@ object SnapshotStore {
   final case class Snapshot(id: Long, buckets: Set[Int], dataDirs: Vector[String],
       files: Vector[FileStats] = Vector.empty)
 
-  def lastSnapshot(root: String): Option[Snapshot] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return None
-    val manifests = Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.matches("snapshot-\\d+\\.tsv"))
-      .toVector
-    if (manifests.isEmpty) return None
-    val latest = manifests.maxBy(p =>
-      p.getFileName.toString.stripPrefix("snapshot-").stripSuffix(".tsv").toLong)
-    Some(readManifest(latest))
-  }
+  def lastSnapshot(root: String): Option[Snapshot] =
+    ManifestLog.latest(root, "snapshot").map(m => readManifest(m._2))
 
   /** Time travel (Iceberg's `VERSION AS OF`): the manifest committed as
     * snapshot `id`, when it still exists ([[expireSnapshots]] may have
@@ -55,7 +46,7 @@ object SnapshotStore {
     * manifest reconstructs that snapshot's exact table state — including
     * its file stats, so ranged reads prune against the state AS OF then. */
   def snapshotAt(root: String, id: Long): Option[Snapshot] = {
-    val p = Paths.get(root).resolve(s"snapshot-$id.tsv")
+    val p = ManifestLog.numberedFile(root, "snapshot", id)
     if (Files.isRegularFile(p)) Some(readManifest(p)) else None
   }
 
@@ -77,13 +68,11 @@ object SnapshotStore {
     Snapshot(id, buckets.result(), dirs.result(), files.result())
   }
 
-  /** Atomic manifest commit: write tmp in the same directory, then rename.
-    * File stats are deduped by path — a repeated backfill of the same dir
-    * (e.g. a formerly-unnormalizable relative root) must not accumulate
-    * duplicate entries that pruneFiles would feed to the reader twice. */
+  /** Atomic manifest commit ([[ManifestLog.writeNumbered]]). File stats
+    * are deduped by path — a repeated backfill of the same dir (e.g. a
+    * formerly-unnormalizable relative root) must not accumulate duplicate
+    * entries that pruneFiles would feed to the reader twice. */
   def commitManifest(root: String, s: Snapshot): Unit = {
-    val dir = Paths.get(root)
-    Files.createDirectories(dir)
     val body = new StringBuilder()
     body ++= s"snapshot\t${s.id}\n"
     s.buckets.toVector.sorted.foreach(b => body ++= s"bucket\t$b\n")
@@ -91,10 +80,7 @@ object SnapshotStore {
     s.files.distinctBy(_.path).foreach { f =>
       body ++= s"file\t${f.path}\t${f.tsMin}\t${f.tsMax}\t${f.hostMin}\t${f.hostMax}\n"
     }
-    val tmp = dir.resolve(s"snapshot-${s.id}.tsv.tmp")
-    Files.write(tmp, body.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"snapshot-${s.id}.tsv"),
-      StandardCopyOption.ATOMIC_MOVE)
+    ManifestLog.writeNumbered(root, "snapshot", s.id, body.toString)
   }
 
   /** Compute per-file min/max stats for a freshly-written data dir: ONE
@@ -296,23 +282,12 @@ object SnapshotStore {
   /** Snapshot expiry: drop all but the newest `keepLast` manifests and
     * delete data dirs no surviving manifest references. */
   def expireSnapshots(root: String, keepLast: Int = 1): Unit = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return
-    val manifests = Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.matches("snapshot-\\d+\\.tsv"))
-      .toVector
-      .sortBy(p => p.getFileName.toString.stripPrefix("snapshot-").stripSuffix(".tsv").toLong)
+    val manifests = ManifestLog.numbered(root, "snapshot").map(_._2)
     if (manifests.length <= keepLast) return
     val (expire, keep) = manifests.splitAt(manifests.length - keepLast)
     val live = keep.map(readManifest).flatMap(_.dataDirs).toSet
     val dead = expire.map(readManifest).flatMap(_.dataDirs).toSet -- live
     expire.foreach(Files.delete)
-    dead.foreach { d =>
-      val p = Paths.get(d)
-      if (Files.isDirectory(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.delete)
-      }
-    }
+    dead.foreach(d => ManifestLog.deleteRecursively(Paths.get(d)))
   }
 }
